@@ -27,14 +27,14 @@ from .plans.ratios import compute_ratios
 from .plans.star_facts import star_companies, synthetic_facts
 from .plans.statements import build_statements
 from .session import default_parallelism
-from .sources.tables import table_path
+from .sources.tables import read_parquet, table_path
 
 
 def build_all_marts(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
     """Materialize companies, statements_annual, and ratios_annual marts
     under ``out_dir`` via idempotent PK upserts. Returns mart -> path."""
-    lineitem = spark.read.parquet(table_path(sf_dir, "lineitem"))
-    supplier = spark.read.parquet(table_path(sf_dir, "supplier"))
+    lineitem = read_parquet(spark, table_path(sf_dir, "lineitem"))
+    supplier = read_parquet(spark, table_path(sf_dir, "supplier"))
 
     companies = star_companies(supplier)
     facts = synthetic_facts(lineitem, entity_partitions=default_parallelism())
@@ -81,7 +81,7 @@ def materialize_facts_bucketed(
     """
     n = buckets or default_parallelism()
     facts = synthetic_facts(
-        spark.read.parquet(table_path(sf_dir, "lineitem")),
+        read_parquet(spark, table_path(sf_dir, "lineitem")),
         entity_partitions=n,
     )
     sinks.write_bucketed(facts, table_name, path, ["cik"], buckets=n)
@@ -103,7 +103,7 @@ def build_marts_from_facts(
     data: an interrupted build that died between mart commits leaves
     the baseline un-advanced, so the next refresh re-diffs and rebuilds
     rather than silently no-opping over a half-written refresh."""
-    supplier = spark.read.parquet(table_path(sf_dir, "supplier"))
+    supplier = read_parquet(spark, table_path(sf_dir, "supplier"))
     companies = star_companies(supplier)
     statements = build_statements(facts, version="v3")
     ratios = compute_ratios(statements)

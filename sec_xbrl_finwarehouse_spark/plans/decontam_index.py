@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_parquet
 from .text_queries import (
     TRAIN_HEX,
     _documents,
@@ -62,7 +63,7 @@ def decontaminate_incremental(
     side is broadcast, so the batch's shingle stream never shuffles;
     docs too short to shingle (or sharing nothing) report 0/false via
     the left join -- every input doc gets a verdict."""
-    stored = spark.read.parquet(f"{index_dir}/eval_shingles")
+    stored = read_parquet(spark, f"{index_dir}/eval_shingles")
     ex = shingles_exploded_of(new_docs.select("doc_id", "text"))
     hits = (
         ex.join(F.broadcast(stored), "shingle")

@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import parallelize_scan, table_path
+from ..sources.tables import parallelize_scan, read_parquet, table_path
 from .text_queries import _persist_hot, _source_bytes
 
 N_QUERIES = 10        # vec_id < N_QUERIES are the query set
@@ -106,7 +106,7 @@ def _embeddings(spark: SparkSession, sf_dir: str, parallel: bool = True) -> Data
     the UDF subplan executes twice, once for the broadcast side). On a
     real multi-file corpus the scan parallelism comes from the file
     layout and the UDF amortizes over full-size batches."""
-    e = spark.read.parquet(table_path(sf_dir, "embeddings"))
+    e = read_parquet(spark, table_path(sf_dir, "embeddings"))
     if parallel:
         e = parallelize_scan(e, "vec_id")
     return e.withColumn("emb", F.col("embedding").cast("array<double>"))
@@ -1184,7 +1184,7 @@ def append_ivf_index(
     Returns the number of vectors actually appended. The touched-cell
     list is a driver-side collect, bounded by the centroid count --
     metadata-sized, like the partition lists in sinks.py."""
-    cent = spark.read.parquet(f"{index_dir}/centroids")
+    cent = read_parquet(spark, f"{index_dir}/centroids")
     # persist the ASSIGNMENT, the subplan every downstream step reads:
     # the touched-cell collect, the anti-join, and the write would
     # otherwise each re-run the batch scan + centroid projection
@@ -1202,7 +1202,7 @@ def append_ivf_index(
         if not touched:
             return 0
         stored_ids = (
-            spark.read.parquet(f"{index_dir}/corpus")
+            read_parquet(spark, f"{index_dir}/corpus")
             .filter(F.col("cell").isin(touched))
             .select("cell", "neighbor_id")
         )
@@ -1584,7 +1584,7 @@ def q_emb_ivf_index_probe(
     tests/test_ivf_index.py by inspecting the scan's pruning filters).
     At 100 TB this is the difference between scanning NPROBE/cells of
     the data and scanning all of it."""
-    cent = spark.read.parquet(f"{index_dir}/centroids")
+    cent = read_parquet(spark, f"{index_dir}/centroids")
     queries = _embeddings(spark, sf_dir).filter(
         F.col("vec_id") < N_QUERIES
     ).select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"))
@@ -1595,7 +1595,7 @@ def q_emb_ivf_index_probe(
                     _nearest_cells(F.col("qemb"), NPROBE), lambda s: s["cell"]
                 )).alias("cell"))
     )
-    stored = spark.read.parquet(f"{index_dir}/corpus")
+    stored = read_parquet(spark, f"{index_dir}/corpus")
     scored = stored.join(F.broadcast(probes), "cell").select(
         "query_id", "neighbor_id",
         F.round(_cosine(F.col("qemb"), F.col("emb")), 6).alias("cosine"),
@@ -2348,13 +2348,13 @@ def q_emb_ivfpq_index_probe(
     asserted in tests/test_ivf_index.py) and the refine gather reads the
     stored vector table by id. No corpus-wide work happens at query
     time at all: cell assignment and encoding were paid once at build."""
-    cent = spark.read.parquet(f"{index_dir}/centroids")
+    cent = read_parquet(spark, f"{index_dir}/centroids")
     cbooks_one_row = _pq_cbooks_one_row_from_cent(cent)
     queries = _embeddings(spark, sf_dir).filter(
         F.col("vec_id") < N_QUERIES
     ).select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"))
-    encoded = spark.read.parquet(f"{index_dir}/codes")
-    vectors = spark.read.parquet(f"{index_dir}/vectors")
+    encoded = read_parquet(spark, f"{index_dir}/codes")
+    vectors = read_parquet(spark, f"{index_dir}/vectors")
     return _ivfpq_search(encoded, vectors, queries, cbooks_one_row)
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import table_path
+from ..sources.tables import read_parquet, table_path
 from .sqlfrag import hex_prefix_bigint_sql, hex_prefix_frac_sql
 
 SESSION_GAP_SEC = 1800
@@ -57,7 +57,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return normalize_events_ts(
-        spark.read.parquet(table_path(sf_dir, "events"))
+        read_parquet(spark, table_path(sf_dir, "events"))
     )
 
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_parquet
 from .text_queries import (
     JACCARD_THRESHOLD,
     _documents,
@@ -56,8 +57,8 @@ def dedup_incremental(
     (monotone ingest ids give this for free)."""
     return dedup_incremental_frames(
         new_docs,
-        spark.read.parquet(f"{index_dir}/bands"),
-        spark.read.parquet(f"{index_dir}/shingles"),
+        read_parquet(spark, f"{index_dir}/bands"),
+        read_parquet(spark, f"{index_dir}/shingles"),
     )
 
 

@@ -21,7 +21,7 @@ from ..plans.api_queries import company_profile, company_ratios, screener
 from ..plans.ratios import compute_ratios
 from ..plans.star_facts import star_companies, synthetic_facts, synthetic_filings
 from ..plans.statements import build_statements
-from ..sources.tables import parallelize_scan, table_path
+from ..sources.tables import parallelize_scan, read_parquet, table_path
 
 # ---- shared expression snippets (Spark SQL == DuckDB) ---------------------
 
@@ -42,7 +42,7 @@ SCREENER_LIMIT = 25
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 # ---- reference-parity operators on star tables ----------------------------

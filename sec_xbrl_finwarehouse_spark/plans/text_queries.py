@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.connected_components import hash_min_components
-from ..sources.tables import parallelize_scan, table_path
+from ..sources.tables import parallelize_scan, read_parquet, table_path
 from .sqlfrag import hex_prefix_bigint_sql, hex_prefix_frac_sql
 
 JACCARD_THRESHOLD = 0.5
@@ -128,7 +128,7 @@ def _documents(
     the kernel never receives near-empty Arrow batches (guide §4.2;
     the r12 anti-scaling fix -- see parallelize_scan)."""
     return parallelize_scan(
-        spark.read.parquet(table_path(sf_dir, "documents")), "doc_id",
+        read_parquet(spark, table_path(sf_dir, "documents")), "doc_id",
         min_split_rows=KERNEL_MIN_SPLIT_ROWS if kernel else None,
     )
 

@@ -1,19 +1,91 @@
 """Parquet star-schema loaders (driver test data, TESTDATA.md).
 
-Reads are plain ``spark.read.parquet`` so Catalyst predicate pushdown /
-column pruning reach the scan. Nothing here collects or caches --
+The star-table loaders and the query builders read parquet through
+:func:`read_parquet`, which memoizes the schema Spark infers. Inference
+reads the footers in a Spark job, so a plain ``spark.read.parquet``
+costs one job per call, paid while a query is still being composed.
+The first read of a path keeps Spark's inferred ``df.schema``; later
+reads pass it back with ``spark.read.schema``, which runs no job. The
+memo key is
+
+* the path,
+* each data file's identity under it, ``(name, st_mtime_ns, st_size)``
+  from a driver-side ``os.stat``/walk, so a rewritten file is
+  re-inferred,
+* the session values of the confs that change parquet inference
+  (:data:`_INFERENCE_CONFS`), so e.g. a ``TIMESTAMP(NANOS)`` column
+  read as ``bigint`` under ``nanosAsLong`` is never reused by a session
+  without it.
+
+The memo holds one entry per path, replaced when its key changes, and at
+most :data:`_MAX_SCHEMAS` paths. Paths ``os.stat`` cannot see (object
+stores, URIs, globs) take the plain inferred read. The memo holds only
+schemas: scans stay lazy, so Catalyst predicate pushdown and column
+pruning still reach them, and nothing here collects or caches data --
 callers decide lifetimes.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..schemas import STAR_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# session confs whose values change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_MAX_SCHEMAS = 256
+# path -> (key, inferred schema); see the module docstring
+_schemas: dict[str, tuple[tuple, StructType]] = {}
+_schemas_lock = threading.Lock()
+
+
+def _files_identity(path: str) -> tuple:
+    """``(name, st_mtime_ns, st_size)`` of the file at ``path``, or of
+    every file under it. Raises OSError when the path is not local."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return ((path, st.st_mtime_ns, st.st_size),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            name = os.path.join(root, f)
+            fs = os.stat(name)
+            out.append((name, fs.st_mtime_ns, fs.st_size))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers each path's schema once
+    per file identity and conf set, and after that reads with the
+    memoized schema, launching no job."""
+    try:
+        files = _files_identity(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (files, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    hit = _schemas.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    with _schemas_lock:
+        if path not in _schemas and len(_schemas) >= _MAX_SCHEMAS:
+            del _schemas[next(iter(_schemas))]
+        _schemas[path] = (key, schema)
+    return df
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -104,8 +176,11 @@ def parallelize_scan(
 
 
 def _footer_rows(paths: list[str]) -> int:
-    """Total row count from local parquet footers; -1 when unreadable
-    (caller then keeps the byte-estimated width)."""
+    """Total row count from local parquet footers; -1 when unknown --
+    no files, or a footer is unreadable (caller then keeps the
+    byte-estimated width)."""
+    if not paths:
+        return -1
     try:
         import pyarrow.parquet as pq
 
@@ -117,7 +192,7 @@ def _footer_rows(paths: list[str]) -> int:
 def load_star_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = STAR_TABLES
 ) -> dict[str, DataFrame]:
-    return {name: spark.read.parquet(table_path(sf_dir, name)) for name in names}
+    return {name: read_parquet(spark, table_path(sf_dir, name)) for name in names}
 
 
 def register_star_views(

@@ -23,13 +23,22 @@ Policy (allowlists are explicit and justified inline):
   appearing anywhere else (the at-scale OOM shape) fails.
 * ``ArrowEvalPython`` -- allowed only in the LSH family, whose
   hyperplane projection runs as a vectorized pandas UDF.
+
+A source scan also keeps every parquet read in the query builders and
+the mart build on ``sources.tables.read_parquet``, whose memoized schema
+spares each compose the footer-inference job of a bare
+``spark.read.parquet``.
 """
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as entrymod
+import sec_xbrl_finwarehouse_spark as pkg
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -188,5 +197,25 @@ def test_no_single_partition_windows_anywhere(plans):
     offenders = [
         name for name, plan in plans.items()
         if _has_single_partition_window(plan)
+    ]
+    assert offenders == [], offenders
+
+
+BARE_PARQUET_READ = re.compile(r"\bread\.parquet\(")
+
+
+def test_no_bare_parquet_reads_in_builders():
+    """``plans/`` and ``materialize.py`` read parquet only through
+    read_parquet: a bare ``spark.read.parquet(`` would bring back one
+    schema-inference job per query compose."""
+    root = Path(pkg.__file__).parent
+    files = sorted((root / "plans").rglob("*.py")) + [root / "materialize.py"]
+    assert len(files) > 10  # the scan is not vacuous
+    assert BARE_PARQUET_READ.search("df = spark.read.parquet(path)")
+    offenders = [
+        f"{f.relative_to(root)}:{i}"
+        for f in files
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if BARE_PARQUET_READ.search(line)
     ]
     assert offenders == [], offenders
